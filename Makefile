@@ -7,14 +7,18 @@
 #                    sf0.001 / sf0.01 / sf0.1; writes CERTIFY_$(ROUND)_sfX.json
 #   make bench     - full idle-machine bench snapshot -> BENCH_LOCAL_$(ROUND).json
 #   make verify    - test + certify
+#   make perfbench - both perfbench workloads at SEED, untraced (end-to-end
+#                    metrics) then traced (per-layer metrics)
 #
 # ROUND stamps the artifact names so each round's certification is
 # committed alongside the code it certifies.
 
 ROUND ?= r9
 PY ?= python
+SEED ?= 1
+PERFBENCH_WORKLOADS = ingest_month append_and_read
 
-.PHONY: test certify bench verify
+.PHONY: test certify bench verify perfbench
 
 test:
 	$(PY) -m pytest tests/ -q
@@ -30,5 +34,12 @@ bench: FORCE
 	tail -c 400 BENCH_LOCAL_$(ROUND).json
 
 verify: test certify
+
+perfbench:
+	for trace in 0 1; do \
+	  for w in $(PERFBENCH_WORKLOADS); do \
+	    $(PY) perfbench/run.py --workload $$w --seed $(SEED) --seconds 20 --trace $$trace || exit 1; \
+	  done; \
+	done
 
 FORCE:

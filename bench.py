@@ -17,11 +17,12 @@ tenant's burst) grazes one sample of many queries instead of poisoning
 all three samples of a few. On top of that (judge r10 task 1), entries
 whose steady-state samples still span >1.4x get PER-ENTRY RE-SAMPLING:
 up to three extra passes over just the wide entries, each entry sampled
-until two of its steady-state samples agree within 1.4x — a burst that
-grazed one sample is outvoted by clean extras instead of condemning the
-whole run. The JSON records `load1_start/end`, the /proc/stat
+until its two smallest steady-state samples agree within 1.4x — a burst
+that grazed one sample is outvoted by clean extras instead of condemning
+the whole run. The JSON records `load1_start/end`, the /proc/stat
 `steal_pct` across the run, and `noisy_entry_frac` (fraction of entries
-with no two steady-state samples within 1.4x AFTER re-sampling);
+whose two smallest steady-state samples still differ by more than 1.4x
+AFTER re-sampling, so the reported minimum is uncorroborated);
 `noise_flag` is set when that fraction exceeds 10%. With
 SPARK_GRAFT_BENCH_STRICT=1 a flagged snapshot exits non-zero after
 printing, so a noisy run cannot silently become the round's record.
@@ -73,11 +74,13 @@ def _index_build_sec() -> float:
 
 
 def _steady_band_wide(samples: list[float], ratio: float = 1.4) -> bool:
-    """True when no two steady-state samples (pass 2 onward) of an entry
-    agree within `ratio` — i.e. the entry's floor estimate is still
-    uncorroborated. Pass 1 is excluded: the first target-scale execution
-    carries cold-path costs and is systematically slower. With exactly
-    two steady samples this reduces to the r9 max/min band gate."""
+    """True when the two smallest steady-state samples (pass 2 onward) of
+    an entry differ by more than `ratio` — i.e. the reported minimum has
+    no corroborating sample. Only those two are compared: two mid-range
+    samples agreeing within `ratio` do not corroborate the minimum.
+    Pass 1 is excluded: the first target-scale execution carries
+    cold-path costs and is systematically slower. With exactly two
+    steady samples this reduces to the r9 max/min band gate."""
     steady = sorted(samples[1:])
     if len(steady) < 2:
         return True

@@ -4,9 +4,10 @@ Reference (clickhouse_query_engine.py:279-375): tick counts via a tagged
 UNION ALL + ``countIf``, OHLC count, min/max timestamp range, derived
 ``date_range_days``; all packaged into ``CoverageInfo``.
 
-Spark-first: the union+countIf shape is preserved as an operator (it is
-also one of the oracle-checked queries), but the facade computes the three
-aggregates directly — one job per table, each a partial-aggregated scan.
+Spark-first: the facade extends the reference's tagged union to all three
+tables and answers every number in ONE aggregation over it — each table is
+scanned once (pruned to the instrument), and the whole report costs one
+shuffle-map job plus one result job.
 """
 
 from __future__ import annotations
@@ -17,53 +18,43 @@ from pyspark.sql import functions as F
 from exness_data_preprocess_spark.models import CoverageInfo
 
 
-def tagged_union_counts(
-    raw: DataFrame, std: DataFrame, instrument: str | None = None
-) -> DataFrame:
-    """UNION ALL + conditional count (clickhouse_query_engine.py:301-314)."""
-    if instrument is not None:
-        raw = raw.filter(F.col("instrument") == instrument.upper())
-        std = std.filter(F.col("instrument") == instrument.upper())
-    tagged = raw.select(F.lit("raw_spread_ticks").alias("table")).unionAll(
-        std.select(F.lit("standard_ticks").alias("table"))
-    )
-    return tagged.agg(
-        F.count(F.when(F.col("table") == "raw_spread_ticks", 1)).alias("raw_count"),
-        F.count(F.when(F.col("table") == "standard_ticks", 1)).alias("std_count"),
-    )
-
-
 def get_data_coverage(
     raw: DataFrame,
     std: DataFrame,
-    ohlc: DataFrame | None,
+    ohlc: DataFrame,
     instrument: str,
     database: str = "exness",
 ) -> CoverageInfo:
-    """Assemble CoverageInfo (clickhouse_query_engine.py:279-375)."""
+    """Assemble CoverageInfo (clickhouse_query_engine.py:279-375).
+
+    One aggregation over a tagged UNION ALL of the three pruned scans:
+    raw count/min/max and the standard and bar counts come back in one
+    row. Only the raw branch carries ``timestamp``; the count-only
+    branches project a NULL in its place, so their scans read no data
+    column. The report costs two Spark jobs; one aggregate per table
+    would cost two each."""
     inst = instrument.upper()
-    # ONE aggregate pass over the raw table returns count+min+max
-    # together (review find: a tagged-union count job plus a separate
-    # min/max job doubled the dominant raw scan; tagged_union_counts
-    # remains the oracle-checked operator for its own registry query)
-    rng = (
-        raw.filter(F.col("instrument") == inst)
-        .agg(
-            F.count("*").alias("n"),
-            F.min("timestamp").alias("earliest"),
-            F.max("timestamp").alias("latest"),
+
+    def tagged(df: DataFrame, tag: str, ts) -> DataFrame:
+        return df.filter(F.col("instrument") == inst).select(
+            F.lit(tag).alias("t"), ts.alias("ts")
         )
-        .first()
+
+    no_ts = F.lit(None).cast("timestamp")
+    u = (
+        tagged(raw, "raw", F.col("timestamp"))
+        .unionAll(tagged(std, "std", no_ts))
+        .unionAll(tagged(ohlc, "ohlc", no_ts))
     )
-    raw_count = rng["n"] if rng else 0
-    std_count = std.filter(F.col("instrument") == inst).count()
-
-    ohlc_count = 0
-    if ohlc is not None:
-        ohlc_count = ohlc.filter(F.col("instrument") == inst).count()
-
-    earliest = rng["earliest"] if rng else None
-    latest = rng["latest"] if rng else None
+    row = u.agg(
+        *[
+            F.count(F.when(F.col("t") == tag, 1)).alias(tag)
+            for tag in ("raw", "std", "ohlc")
+        ],
+        F.min("ts").alias("earliest"),
+        F.max("ts").alias("latest"),
+    ).first()
+    earliest, latest = row["earliest"], row["latest"]
     # timedelta.days truncation is DELIBERATE reference parity
     # (clickhouse_query_engine.py:356 computes exactly this)
     date_range_days = (latest - earliest).days if earliest and latest else 0
@@ -71,9 +62,9 @@ def get_data_coverage(
     return CoverageInfo(
         database=database,
         storage_bytes=0,
-        raw_spread_ticks=raw_count,
-        standard_ticks=std_count,
-        ohlc_bars=ohlc_count,
+        raw_spread_ticks=row["raw"],
+        standard_ticks=row["std"],
+        ohlc_bars=row["ohlc"],
         earliest_date=str(earliest) if earliest else None,
         latest_date=str(latest) if latest else None,
         date_range_days=date_range_days,

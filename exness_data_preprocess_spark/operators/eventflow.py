@@ -108,6 +108,20 @@ def funnel_counts(
     return reach.agg(*counts)
 
 
+def _join_null_safe(
+    left: DataFrame, right: DataFrame, keys: list[str], how: str = "inner"
+) -> DataFrame:
+    """Equi-join on ``keys`` with NULL matching NULL — the grouping
+    ``groupBy`` applies, so a NULL key or scope is one funnel entity in
+    both twins, not one that dies at the first join."""
+    r = right.select(
+        *[F.col(c).alias(f"_r_{c}") for c in keys],
+        *[c for c in right.columns if c not in keys],
+    )
+    cond = [F.col(c).eqNullSafe(F.col(f"_r_{c}")) for c in keys]
+    return left.join(r, cond, how).drop(*[f"_r_{c}" for c in keys])
+
+
 def funnel_counts_per_step(
     df: DataFrame,
     steps: list[str],
@@ -127,6 +141,10 @@ def funnel_counts_per_step(
     event times — partial aggregation collapses the hot key map-side,
     so no reducer ever materializes its event set (the pre-r10 shape,
     restored as the skew-guard twin; judge r10 "what's wrong" #5).
+
+    The step joins match NULL to NULL on (scope, key): a NULL key or
+    scope is one funnel entity here, exactly as the collected twin's
+    ``groupBy`` makes it, so the twins agree on NULL input too.
     """
     if not steps:
         raise ValueError("steps must be non-empty")
@@ -151,13 +169,12 @@ def funnel_counts_per_step(
             F.col(f"r{i-1}").isNotNull()
         )
         nxt = (
-            ev.filter(F.col("t") == s)
-            .join(survivors, [*scope, "k"])
+            _join_null_safe(ev.filter(F.col("t") == s), survivors, [*scope, "k"])
             .filter(F.col("us") > F.col(f"r{i-1}"))
             .groupBy(*scope, "k")
             .agg(F.min("us").alias(f"r{i}"))
         )
-        reach = reach.join(nxt, [*scope, "k"], "left")
+        reach = _join_null_safe(reach, nxt, [*scope, "k"], "left")
     counts = [
         F.count(F.col(f"r{i}")).alias(f"n_step_{i}")
         for i in range(1, len(steps) + 1)

@@ -723,19 +723,28 @@ class SparkDataProcessor:
                 raw = raw.filter(F.col("year_month") <= ym_hi)
                 std = std.filter(F.col("year_month") <= ym_hi)
 
+        from exness_data_preprocess_spark.cache import (
+            checkpoint_rdd_id,
+            release_checkpoints,
+        )
+
         # localCheckpoint: the bar frame feeds both the write and the
         # returned count — one OHLC aggregation, not two (review find);
-        # bar volume is bounded (minutes x instruments)
+        # bar volume is bounded (minutes x instruments). Released once
+        # counted, so a long-lived session keeps no truncated RDD per call.
         bars = generate_ohlc_1m(raw, std).localCheckpoint()
-        if start_date is None and end_date is None:
-            # Mode 1: full regeneration — drop-all + rebuild (M1).
-            self.catalog.drop_instrument("ohlc_1m", inst)
+        own = {checkpoint_rdd_id(bars)} - {None}
+        try:
+            if start_date is None and end_date is None:
+                # Mode 1: full regeneration — drop-all, then rebuild (M1).
+                self.catalog.drop_instrument("ohlc_1m", inst)
+            # every mode rebuilds by partition overwrite; modes 2/3 touch
+            # the affected months only (M2)
             self.catalog.overwrite_partitions(bars, "ohlc_1m")
-        else:
-            # Modes 2/3: partition overwrite of affected months only (M2).
-            self.catalog.overwrite_partitions(bars, "ohlc_1m")
-        self.engine.invalidate_views()
-        return bars.count()
+            self.engine.invalidate_views()
+            return bars.count()
+        finally:
+            release_checkpoints(self.spark, own)
 
     def update_data(
         self,

@@ -75,8 +75,47 @@ def _range_filter(
     return out
 
 
+def _page(df: DataFrame, limit: int | None, offset: int | None) -> DataFrame:
+    if offset:
+        df = df.offset(offset)
+    if limit:
+        df = df.limit(limit)
+    return df
+
+
+def _sorted_on_driver(df: DataFrame) -> pd.DataFrame:
+    """Collect an unordered plan and order it by ``timestamp`` in pandas.
+
+    Every row lands on the driver anyway, so a Spark ``orderBy`` here
+    would only add a range-partition sampling job and a shuffle. The
+    sort is stable with NaT first, Spark's ascending NULLS FIRST; the
+    timestamp is unique per instrument in every table and resample, so
+    the order is fully determined."""
+    pdf = df.toPandas()
+    return pdf.sort_values(
+        "timestamp", kind="stable", na_position="first", ignore_index=True
+    )
+
+
 class SparkQueryEngine:
-    """DataFrame-plan twin of the reference's ClickHouseQueryEngine."""
+    """DataFrame-plan twin of the reference's ClickHouseQueryEngine.
+
+    Read path: every table resolves through ``ParquetCatalog.read`` with
+    its declared schema, so building a query infers nothing from parquet
+    footers. Where the result is sorted depends on who consumes it:
+
+    - ``query_*_df`` end in a Spark ``orderBy("timestamp")``: the frame
+      is the Spark-side contract, ordered for any consumer, and the
+      registry's oracle checks it.
+    - ``query_ticks`` / ``query_ohlc`` without ``limit``/``offset``
+      collect the unordered plan and sort it on the driver (stable, NaT
+      first): all rows land there anyway, and a distributed sort of a
+      collected result costs a sampling job plus a shuffle.
+    - With ``limit`` or ``offset`` the page boundary needs the global
+      order, so those keep the Spark ``orderBy``.
+    - Pagination keeps its keyset ``orderBy`` + ``limit``; coverage
+      needs no order.
+    """
 
     def __init__(self, spark: SparkSession, catalog: ParquetCatalog):
         self.spark = spark
@@ -91,6 +130,17 @@ class SparkQueryEngine:
         return self.catalog.read(self.spark, "ohlc_1m")
 
     # -- queries (clickhouse_query_engine.py:66-132) -------------------------
+    def _ticks_plan(
+        self,
+        instrument: str,
+        variant: str,
+        start_date: str | None,
+        end_date: str | None,
+    ) -> DataFrame:
+        inst = validate_pair(instrument)
+        df = _range_filter(self.ticks_df(variant), inst, start_date, end_date)
+        return df.select("timestamp", "bid", "ask")
+
     def query_ticks_df(
         self,
         instrument: str = "EURUSD",
@@ -102,14 +152,8 @@ class SparkQueryEngine:
     ) -> DataFrame:
         """DataFrame-returning tick scan — the Spark-native surface; the
         pandas twin below is the reference-parity API edge (A6)."""
-        inst = validate_pair(instrument)
-        df = _range_filter(self.ticks_df(variant), inst, start_date, end_date)
-        df = df.select("timestamp", "bid", "ask").orderBy("timestamp")
-        if offset:
-            df = df.offset(offset)
-        if limit:
-            df = df.limit(limit)
-        return df
+        df = self._ticks_plan(instrument, variant, start_date, end_date)
+        return _page(df.orderBy("timestamp"), limit, offset)
 
     def query_ticks(
         self,
@@ -120,11 +164,30 @@ class SparkQueryEngine:
         limit: int | None = None,
         offset: int | None = None,
     ) -> pd.DataFrame:
-        return self.query_ticks_df(
-            instrument, variant, start_date, end_date, limit, offset
-        ).toPandas()
+        if limit or offset:
+            return self.query_ticks_df(
+                instrument, variant, start_date, end_date, limit, offset
+            ).toPandas()
+        return _sorted_on_driver(
+            self._ticks_plan(instrument, variant, start_date, end_date)
+        )
 
     # -- OHLC + resample (clickhouse_query_engine.py:134-277) ---------------
+    def _ohlc_plan(
+        self,
+        instrument: str,
+        timeframe: str,
+        start_date: str | None,
+        end_date: str | None,
+    ) -> DataFrame:
+        inst = validate_pair(instrument)
+        validate_timeframe(timeframe)
+        minutes = TIMEFRAME_MINUTES[timeframe]
+        df = _range_filter(self.ohlc_df(), inst, start_date, end_date)
+        if minutes > 1:
+            return resample_ohlc(df, minutes)
+        return df.drop("year_month")
+
     def query_ohlc_df(
         self,
         instrument: str = "EURUSD",
@@ -135,20 +198,8 @@ class SparkQueryEngine:
         offset: int | None = None,
     ) -> DataFrame:
         """DataFrame-returning OHLC query (direct 1m scan or resample)."""
-        inst = validate_pair(instrument)
-        validate_timeframe(timeframe)
-        minutes = TIMEFRAME_MINUTES[timeframe]
-        df = _range_filter(self.ohlc_df(), inst, start_date, end_date)
-        if minutes > 1:
-            df = resample_ohlc(df, minutes)
-        else:
-            df = df.drop("year_month")
-        df = df.orderBy("timestamp")
-        if offset:
-            df = df.offset(offset)
-        if limit:
-            df = df.limit(limit)
-        return df
+        df = self._ohlc_plan(instrument, timeframe, start_date, end_date)
+        return _page(df.orderBy("timestamp"), limit, offset)
 
     def query_ohlc(
         self,
@@ -159,19 +210,21 @@ class SparkQueryEngine:
         limit: int | None = None,
         offset: int | None = None,
     ) -> pd.DataFrame:
-        return self.query_ohlc_df(
-            instrument, timeframe, start_date, end_date, limit, offset
-        ).toPandas()
+        if limit or offset:
+            return self.query_ohlc_df(
+                instrument, timeframe, start_date, end_date, limit, offset
+            ).toPandas()
+        return _sorted_on_driver(
+            self._ohlc_plan(instrument, timeframe, start_date, end_date)
+        )
 
     # -- coverage / instruments (clickhouse_query_engine.py:279-388) --------
     def get_data_coverage(self, instrument: str = "EURUSD"):
-        inst = validate_pair(instrument)
-        ohlc = self.ohlc_df() if self.catalog.exists("ohlc_1m") else None
         return get_data_coverage(
             self.ticks_df("raw_spread"),
             self.ticks_df("standard"),
-            ohlc,
-            inst,
+            self.ohlc_df(),
+            validate_pair(instrument),
         )
 
     def get_instruments(self) -> list[str]:

@@ -67,6 +67,31 @@ OHLC_1M_SCHEMA = T.StructType(
 
 OHLC_1M_COLUMNS = [f.name for f in OHLC_1M_SCHEMA.fields]
 
+
+def _stored_read_schema(schema: T.StructType) -> T.StructType:
+    """The schema a stored table reads back with: its data columns, then
+    the ``instrument`` and ``year_month`` partition columns, all
+    nullable. This is exactly what partition discovery plus parquet
+    footer inference return (``year_month=202401`` directories infer as
+    int), so supplying it changes no column, only skips the footer
+    read."""
+    data = [
+        T.StructField(f.name, f.dataType, True)
+        for f in schema.fields
+        if f.name != "instrument"
+    ]
+    return T.StructType(
+        data
+        + [
+            T.StructField("instrument", T.StringType(), True),
+            T.StructField("year_month", T.IntegerType(), True),
+        ]
+    )
+
+
+TICK_READ_SCHEMA = _stored_read_schema(TICK_SCHEMA)
+OHLC_1M_READ_SCHEMA = _stored_read_schema(OHLC_1M_SCHEMA)
+
 # Resampled output adds 4 nullable derived ratios
 # (clickhouse_query_engine.py:258-261)
 DERIVED_RATIO_COLUMNS = [

@@ -31,11 +31,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from exness_data_preprocess_spark.functions.timefuncs import year_month
+from exness_data_preprocess_spark.schema import (
+    OHLC_1M_READ_SCHEMA,
+    TICK_READ_SCHEMA,
+)
 
 
 TICK_TABLES = ("raw_spread_ticks", "standard_ticks")
 OHLC_TABLE = "ohlc_1m"
 PARTITION_COLS = ["instrument", "year_month"]
+
+#: declared read schema of each stored table (schema.py): resolving a
+#: table with it skips the parquet footer inference a bare
+#: ``spark.read.parquet`` runs on every call
+READ_SCHEMAS = {
+    "raw_spread_ticks": TICK_READ_SCHEMA,
+    "standard_ticks": TICK_READ_SCHEMA,
+    OHLC_TABLE: OHLC_1M_READ_SCHEMA,
+}
 
 #: managed corpus-dedup artifact tables (one per DedupIndex frame) — the
 #: steady-state ingest-dedup state lives IN the warehouse, next to the
@@ -88,28 +101,30 @@ class ParquetCatalog:
         p = self.base / table
         return p.exists() and any(p.rglob("*.parquet"))
 
+    def _load(self, spark: SparkSession, table: str) -> DataFrame:
+        """The one loader of the stored tables: the declared read schema,
+        so resolving a table lists its files but opens no footer."""
+        return spark.read.schema(READ_SCHEMAS[table]).parquet(self.path(table))
+
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        """Partition-pruned scan; ``year_month`` comes back as a partition
-        column and is dropped from the logical row (it is derivable).
+        """Partition-pruned scan of a stored table, with ``instrument`` and
+        ``year_month`` (int) as partition columns after the data columns.
+
+        The schema is declared, not inferred: ``schema.py`` holds each
+        table's read schema, which equals what partition discovery plus
+        footer inference return for a store this package wrote, so no
+        parquet footer is opened to resolve the table (a bare
+        ``spark.read.parquet`` spends one footer-reading job per call on
+        that). Files lacking a declared column read it as NULL.
 
         A table that exists but holds no files yet reads as an EMPTY
-        typed frame — the reference's freshly-bootstrapped tables answer
-        queries with zero rows, not errors (clickhouse_manager.py:110-143).
+        frame of the same schema — the reference's freshly-bootstrapped
+        tables answer queries with zero rows, not errors
+        (clickhouse_manager.py:110-143).
         """
         if not self.exists(table):
-            from pyspark.sql import functions as F
-
-            from exness_data_preprocess_spark.schema import (
-                OHLC_1M_SCHEMA,
-                TICK_SCHEMA,
-            )
-
-            schema = OHLC_1M_SCHEMA if table == OHLC_TABLE else TICK_SCHEMA
-            empty = spark.createDataFrame([], schema)
-            return empty.withColumn(
-                "year_month", F.lit(None).cast("string")
-            )
-        return spark.read.parquet(self.path(table))
+            return spark.createDataFrame([], READ_SCHEMAS[table])
+        return self._load(spark, table)
 
     def write_ticks(
         self,
@@ -209,7 +224,7 @@ class ParquetCatalog:
                 )
                 touched_keys = [f"{i}\x00{m}" for i, m in touched]
                 existing = (
-                    df.sparkSession.read.parquet(self.path(table))
+                    self._load(df.sparkSession, table)
                     .filter(F.col("year_month").isin(months))
                     .filter(F.col("instrument").isin(insts))
                     .filter(pair_key.isin(touched_keys))
@@ -633,7 +648,7 @@ class ParquetCatalog:
         before = _count_files()
         if before == 0:
             return {"files_before": 0, "files_after": 0}
-        df = spark.read.parquet(self.path(table))
+        df = self._load(spark, table)
         if instrument is not None:
             df = df.filter(F.col("instrument") == instrument.upper())
         # Break lineage from the files being replaced: Spark refuses to

@@ -96,6 +96,39 @@ def test_funnel_per_step_twin_value_identical(spark):
     b0 = funnel_counts_per_step(ev, steps).collect()[0]
     assert tuple(a0) == tuple(b0)
 
+    # NULL keys and a NULL scope: groupBy makes each one funnel entity,
+    # so the per-step joins must match NULL to NULL
+    null_rows = rows + [
+        (1, 9, 0, None, "view"), (1, 10, 0, None, "click"),
+        (1, 11, 0, None, "purchase"),
+        (3, 9, 0, 5, "view"), (3, 10, 0, 5, "click"),
+    ]
+    ev_null = _ev(spark, null_rows).withColumn(
+        "day",
+        F.when(F.col("user_id") == 5, F.lit(None)).otherwise(
+            F.date_format(F.to_date("ts"), "yyyy-MM-dd")
+        ),
+    )
+    got = {}
+    for scope in ("day", None):
+        a = [
+            tuple(r)
+            for r in funnel_counts(ev_null, steps, within_col=scope).collect()
+        ]
+        b = [
+            tuple(r)
+            for r in funnel_counts_per_step(
+                ev_null, steps, within_col=scope
+            ).collect()
+        ]
+        assert a == b
+        got[scope] = a
+    # the NULL user completes the day-1 funnel; user 5 sits in the NULL
+    # scope, ordered first
+    assert got["day"][0] == (None, 1, 1, 0)
+    assert ("2024-01-01", 4, 2, 2) in got["day"]
+    assert got[None] == [(5, 4, 2)]
+
 
 def test_funnel_adaptive_picks_by_hot_key_probe(spark):
     """funnel_counts_adaptive must return identical values to the twins
